@@ -10,15 +10,30 @@ directory keyed by the same content hash. A warm hit re-reads columnar
 Parquet (vectorized scan, pushdown) instead of re-parsing CSV/JSON — the
 moral equivalent, with the same invalidation rule (any input byte change →
 new hash → re-ingest).
+
+Each entry directory ``t_<index>`` holds the Parquet files plus
+``_dsq_schema.json``, the ingested DataFrame's ``schema.json()`` (field
+metadata such as ``dsq_varied`` included).  ``put`` writes it last and
+atomically, so it is the entry's only validity marker: an entry without
+it (an interrupted import, or one written before the file existed) is
+invalid and re-imported.  Both ``put`` and ``get`` read the Parquet back
+with ``spark.read.schema(...)``, so neither launches a schema-inference
+job.
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+# The entry's validity marker and stored schema (module docstring).  A
+# leading underscore keeps Spark's file listing from reading it as data.
+SCHEMA_FILE = "_dsq_schema.json"
 
 
 def content_hash(paths: list[str], key_extra: tuple = ()) -> str:
@@ -57,9 +72,11 @@ class ParquetCache:
         if not self.enabled:
             return None
         part = os.path.join(self.dir, f"t_{index}")
-        marker = os.path.join(part, "_SUCCESS")
+        marker = os.path.join(part, SCHEMA_FILE)
         if os.path.exists(marker):
-            return spark.read.parquet(part)
+            with open(marker, encoding="utf-8") as fh:
+                schema = T.StructType.fromJson(json.load(fh))
+            return spark.read.schema(schema).parquet(part)
         if not self._announced:
             # exact reference stderr on a cold/invalidated cache
             # (main.go cache path; pinned by scripts/test.py:289-311)
@@ -74,4 +91,9 @@ class ParquetCache:
             return df
         part = os.path.join(self.dir, f"t_{index}")
         df.write.mode("overwrite").parquet(part)
-        return df.sparkSession.read.parquet(part)
+        # last step, atomic: the schema file is what marks the entry valid
+        tmp = os.path.join(part, SCHEMA_FILE + ".tmp")
+        with open(tmp, "w", encoding="utf-8") as fh:
+            fh.write(df.schema.json())
+        os.replace(tmp, os.path.join(part, SCHEMA_FILE))
+        return df.sparkSession.read.schema(df.schema).parquet(part)

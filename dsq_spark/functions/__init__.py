@@ -437,7 +437,12 @@ def _sql_udfs() -> list[str]:
         "THEN named_struct('r', 1, 'n', CAST(trim(x) AS DOUBLE), 't', '') "
         "ELSE named_struct('r', 2, 'n', 0.0d, 't', x) END",
     ]
-    # pure-Catalyst fast path for simple JSON1 mutator shapes
+    # pure-Catalyst fast path for simple JSON1 mutator shapes.  Its 3 SQL
+    # UDFs are 46 KB of the ~56 KB of registered SQL.  Registering them
+    # only under --json-fast was sized and not kept (perfbench, 4-vCPU
+    # host): operators setup_cpu_s fell ~12%, but query_cpu_s rose in 3 of
+    # 3 paired runs, by up to 26%, because later queries reuse the
+    # analyzer JIT warm-up this registration pays for.
     from dsq_spark.functions.json_fast import fast_mutator_udfs
 
     stmts.extend(fast_mutator_udfs())
@@ -466,12 +471,14 @@ def register_all(spark: SparkSession, strict_json: bool | None = None,
     json_extract() with a raise_error guard (still pure Catalyst) and
     bakes raising closures into the JSON1 Python engine.
 
-    Idempotent AND cheap on repeat: the ~70 DDL statements + pandas-UDF
-    registrations cost ~0.9 s of py4j round-trips, and query helpers
-    call this per query — a session-scoped conf marker skips the replay
-    when the same mode is already registered (this was the entire
-    r5→r6 'regression' of strftime_code_coverage: the library grew, and
-    every datetime/dialect query re-paid its registration).  ``force``
+    Idempotent AND cheap on repeat: the first call on a fresh session
+    (the ~70 DDL statements + pandas-UDF registrations, with the JVM still
+    cold) took 6.5-14.0 s wall in perfbench's traced runs on a 4-vCPU
+    host, depending on its load, and query helpers call this per query —
+    a session-scoped conf marker skips the replay when the same mode is
+    already registered (this was the entire r5→r6 'regression' of
+    strftime_code_coverage: the library grew, and every datetime/dialect
+    query re-paid its registration).  ``force``
     replays regardless (tests that monkeypatch registration)."""
     if strict_json is None:
         strict_json = os.environ.get("DSQ_STRICT_JSON", "").lower() in (

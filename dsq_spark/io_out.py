@@ -6,9 +6,11 @@ pretty/JSON grammar (reference main.go:90-182; goldens pinned at
 scripts/test.py:207-266).
 
 Both sinks stream via toLocalIterator() — one partition in driver memory
-at a time, so a 100 TB result spools without materializing.  The pretty
-table needs global column widths before the first output byte, so it makes
-two streaming passes (widths, then rows) rather than one collect().
+at a time, so a 100 TB result spools without materializing — and both
+evaluate the query exactly once.  The pretty table needs global column
+widths before the first output byte, so its single pass spools the
+rendered cells to a driver-local temp file and writes the padded rows
+from there, rather than collect()ing or re-running the query.
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ from __future__ import annotations
 import json
 import math
 import sys
+import tempfile
 from decimal import Decimal as _Decimal
 from typing import IO, Optional
 
@@ -86,40 +89,31 @@ def pretty_table(df: DataFrame, fh: Optional[IO[str]] = None) -> None:
     centered, `(N rows)` footer — matching the reference's tablewriter
     output (goldens scripts/test.py:207-225).
 
-    Two passes over toLocalIterator(), never collect(): pass 1 folds the
-    rendered column widths (and row count), pass 2 streams the rows out —
-    so driver memory stays one-partition-bounded and an un-LIMITed
-    `--pretty` at cluster scale cannot OOM the driver (r3 verdict).  The
-    DataFrame is persisted MEMORY_AND_DISK between the passes so a
-    nondeterministic result (random(), un-ORDERed LIMIT across
-    partitions) cannot return different rows in the second pass than the
-    widths/footer measured in the first (ADVICE r4); the materialization
-    lives on the EXECUTORS (spilling to disk), not the driver, and is
-    bounded by the result the user asked to render — the reference
-    itself materializes the whole table to format it (main.go:142-179),
-    so output size, not driver residency, remains the user's lever."""
+    One toLocalIterator() pass, never collect(): each row's cells are
+    rendered once, folded into the column widths and spooled to a
+    driver-local temp file; the header and the padded rows are then
+    written from the spool.  Driver memory stays one-partition-bounded, so
+    an un-LIMITed `--pretty` at cluster scale cannot OOM the driver, and
+    the query is evaluated once, so the footer always counts the rows
+    printed even for a nondeterministic result (random(), un-ORDERed
+    LIMIT).  Columns are reordered by position, so flattened names with
+    dots (`meta.k`) need no quoting."""
     fh = fh if fh is not None else sys.stdout
-    cols = sorted(df.columns)
-    numeric = {
-        f.name: isinstance(f.dataType, (T.NumericType,))
-        for f in df.schema.fields
-    }
-    proj = df.select(*cols)
-    persisted = False
-    try:
-        proj = proj.persist()
-        persisted = True
-    except Exception:
-        pass  # render anyway; only recompute-consistency is weakened
-    try:
-        widths = [len(c) for c in cols]
-        n = 0
-        for r in proj.toLocalIterator():
+    fields = df.schema.fields
+    order = sorted(range(len(fields)), key=lambda i: fields[i].name)
+    cols = [fields[i].name for i in order]
+    numeric = [isinstance(fields[i].dataType, T.NumericType) for i in order]
+    widths = [len(c) for c in cols]
+    n = 0
+    with tempfile.TemporaryFile("w+", encoding="utf-8") as spool:
+        for r in df.toLocalIterator():
+            cells = [_render_cell(r[i]) for i in order]
+            for i, cell in enumerate(cells):
+                if len(cell) > widths[i]:
+                    widths[i] = len(cell)
+            # one JSON line per row: cells may hold newlines
+            spool.write(json.dumps(cells) + "\n")
             n += 1
-            for i, c in enumerate(cols):
-                w = len(_render_cell(r[c]))
-                if w > widths[i]:
-                    widths[i] = w
         border = "+" + "+".join("-" * (w + 2) for w in widths) + "+"
 
         def center(s: str, w: int) -> str:
@@ -130,23 +124,13 @@ def pretty_table(df: DataFrame, fh: Optional[IO[str]] = None) -> None:
         fh.write(border + "\n")
         fh.write("|" + "|".join(" " + center(c, w + 1) for c, w in zip(cols, widths)) + "|\n")
         fh.write(border + "\n")
-        for r in proj.toLocalIterator():
-            out = []
-            for i, c in enumerate(cols):
-                cell = _render_cell(r[c])
-                if numeric.get(c):
-                    out.append(" " + cell.rjust(widths[i]) + " ")
-                else:
-                    out.append(" " + cell.ljust(widths[i]) + " ")
+        spool.seek(0)
+        for line in spool:
+            out = [" " + (cell.rjust(w) if num else cell.ljust(w)) + " "
+                   for cell, w, num in zip(json.loads(line), widths, numeric)]
             fh.write("|" + "|".join(out) + "|\n")
-        fh.write(border + "\n")
-        fh.write(f"({n} row{'s' if n != 1 else ''})\n")
-    finally:
-        if persisted:
-            try:
-                proj.unpersist()
-            except Exception:
-                pass
+    fh.write(border + "\n")
+    fh.write(f"({n} row{'s' if n != 1 else ''})\n")
 
 
 # --------------------------------------------------------------------------

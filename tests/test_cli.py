@@ -54,6 +54,21 @@ def test_pretty_output(spark):
     assert out == "+---+\n| n |\n+---+\n| 2 |\n+---+\n(1 row)\n"
 
 
+def test_pretty_golden_multirow(spark):
+    """Multi-row --pretty golden: ints (right-aligned, negative), floats
+    (integral ones print as ints, repr otherwise), NULLs, an empty string,
+    a cell wider than its header and JSON cells.  The expected text was
+    captured from the two-pass sink this one replaced."""
+    with open(f"{FIX}/pretty_golden.txt", encoding="utf-8") as fh:
+        want = fh.read()
+    rc, out = _run(["--pretty", f"{FIX}/pretty_golden.json",
+                    "SELECT id, qty, price, price * 2 AS p2, name, tags, "
+                    "json_object('a', id, 'b', name) AS j FROM {} ORDER BY id"],
+                   spark)
+    assert rc == 0
+    assert out == want
+
+
 def test_queryless_dump(spark):
     rc, out = _run([f"{FIX}/cli_ages.json"], spark)
     assert json.loads(out) == [{"age": 33, "id": 1}, {"age": 41, "id": 2}]
@@ -307,10 +322,10 @@ def test_write_zordered_dataset_skips_on_both_columns(spark, tmp_path, sf_dir):
 
 
 def test_pretty_table_streams_without_collect(spark, monkeypatch):
-    """pretty_table must never materialize the result driver-side: widths
-    come from a first toLocalIterator pass, rows stream in a second — an
-    un-LIMITed --pretty at cluster scale stays one-partition-bounded
-    (r3 verdict item)."""
+    """pretty_table must never materialize the result driver-side: one
+    toLocalIterator pass folds the widths and spools the rendered rows to
+    a temp file, so an un-LIMITed --pretty at cluster scale stays
+    one-partition-bounded in driver memory (r3 verdict item)."""
     import io
 
     from pyspark.sql import DataFrame
@@ -331,6 +346,54 @@ def test_pretty_table_streams_without_collect(spark, monkeypatch):
     assert "| " + "b" * 20 + " |" in out
     # numeric right-alignment and centered header survive the streaming path
     assert out.splitlines()[1].startswith("|")
+
+
+def _jobs_in_group(spark, group, fn):
+    """Spark jobs `fn()` launches, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pretty_table_jobs_match_dump_json(spark):
+    """One pass over the result: on a multi-partition grouped DataFrame
+    the pretty sink launches no more Spark jobs than the JSON sink."""
+    from dsq_spark.io_out import dump_json, pretty_table
+
+    def grouped():
+        # a fresh DataFrame per sink: a re-run of the same one would reuse
+        # its shuffle output and skip the map stage
+        return (spark.range(0, 2000, numPartitions=4)
+                .selectExpr("id % 7 AS k", "id")
+                .groupBy("k").count())
+
+    pretty = _jobs_in_group(spark, "sink-pretty",
+                            lambda: pretty_table(grouped(), io.StringIO()))
+    dumped = _jobs_in_group(spark, "sink-json",
+                            lambda: dump_json(grouped(), io.StringIO()))
+    assert 0 < pretty <= dumped, (pretty, dumped)
+
+
+def test_pretty_table_dotted_column_names(spark):
+    """Flattened nested inputs name columns `meta.k`: the sink reorders
+    columns by position, so such names render instead of being resolved
+    as struct fields."""
+    from dsq_spark.io_out import pretty_table
+
+    df = spark.createDataFrame([(1, "v")], "`meta.n` int, `meta.k` string")
+    buf = io.StringIO()
+    pretty_table(df, buf)
+    assert buf.getvalue() == (
+        "+--------+--------+\n"
+        "| meta.k | meta.n |\n"
+        "+--------+--------+\n"
+        "| v      |      1 |\n"
+        "+--------+--------+\n"
+        "(1 row)\n")
 
 
 def test_csv_sqlite_arithmetic_semantics(spark, tmp_path):

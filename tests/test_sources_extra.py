@@ -156,7 +156,11 @@ def test_apache_error(spark, tmp_path):
 
 # --- cache ---
 
-def test_parquet_cache_roundtrip(spark, tmp_path, monkeypatch):
+def test_parquet_cache_roundtrip(spark, tmp_path, monkeypatch, capsys):
+    from dsq_spark import cli
+    from dsq_spark.cache import SCHEMA_FILE
+    from dsq_spark.sources.flatten import flatten
+
     monkeypatch.setenv("DSQ_SPARK_CACHE_DIR", str(tmp_path / "cache"))
     src = tmp_path / "c.csv"
     src.write_text("a,b\n1,x\n2,y\n")
@@ -173,6 +177,51 @@ def test_parquet_cache_roundtrip(spark, tmp_path, monkeypatch):
     src.write_text("a,b\n1,x\n2,y\n3,z\n")
     assert content_hash(paths) != h1
     assert ParquetCache(paths, enabled=True).get(spark, 0) is None
+
+    # the stored schema round-trips exactly (field metadata and dotted
+    # flattened names included), and a hit launches no Spark job
+    (tmp_path / "n.jsonl").write_text(
+        '{"id": 1, "meta": {"k": "a", "n": 2}}\n'
+        '{"id": 2, "meta": {"k": null, "n": 3}}\n')
+    (tmp_path / "v.json").write_text(
+        '[{"id": 1, "v": 1}, {"id": 2, "v": "two"}, {"id": 3, "v": 4.5}]')
+    sc = spark.sparkContext
+    for name, convert, expect in (("c.csv", False, "a"), ("c.csv", True, "a"),
+                                  ("n.jsonl", False, "meta.k"),
+                                  ("v.json", False, "v")):
+        p = [str(tmp_path / name)]
+        key = (convert, None)
+        miss = ParquetCache(p, enabled=True, key_extra=key)
+        assert miss.get(spark, 0) is None
+        ingested = flatten(read_file(spark, p[0], convert_numbers=convert))
+        stored = miss.put(ingested, 0)
+        sc.setJobGroup("cache-hit", "cache-hit")
+        try:
+            hit = ParquetCache(p, enabled=True, key_extra=key).get(spark, 0)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert hit is not None
+        assert list(sc.statusTracker().getJobIdsForGroup("cache-hit")) == []
+        plain = spark.read.parquet(os.path.join(miss.dir, "t_0"))
+        assert hit.schema == stored.schema == plain.schema, name
+        assert expect in hit.columns, (name, hit.columns)
+        assert sorted(hit.collect()) == sorted(ingested.collect()), name
+    assert hit.schema["v"].metadata.get("dsq_varied")
+
+    # an entry without the schema file is invalid and gets re-imported
+    capsys.readouterr()
+    args = ["-C", str(src), "SELECT a FROM {} ORDER BY a"]
+    assert cli.run(args, spark) == 0
+    first = capsys.readouterr().out
+    marker = os.path.join(ParquetCache(paths, enabled=True,
+                                       key_extra=(False, None)).dir,
+                          "t_0", SCHEMA_FILE)
+    os.remove(marker)
+    assert cli.run(args, spark) == 0
+    again = capsys.readouterr()
+    assert "Cache invalid, re-import required." in again.err
+    assert again.out == first
+    assert os.path.exists(marker)
 
 
 def test_cache_key_includes_ingest_flags(tmp_path, monkeypatch):
